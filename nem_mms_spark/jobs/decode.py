@@ -23,6 +23,7 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 from nem_mms_spark import framing
 from nem_mms_spark import manifest as M
 from nem_mms_spark.codecs import decode_block
+from nem_mms_spark.jobs.tasks import run_file_tasks, tuned
 
 
 def read_manifest(spark: SparkSession, out_dir: str) -> DataFrame:
@@ -203,9 +204,6 @@ def decode_blocks(
     if engine == "pandas":
 
         def decode_group(pdf: pd.DataFrame) -> pd.DataFrame:
-            from nem_mms_spark.jobs.encode import _tune_worker
-
-            _tune_worker()
             n = int(pdf["value_count"].iloc[0])
             if not (pdf["value_count"] == n).all():
                 raise ValueError(
@@ -228,7 +226,7 @@ def decode_blocks(
             "part_id", "block_id"
         ]
         return bdf.groupBy(*gcols).applyInPandas(
-            decode_group, schema=out_schema
+            tuned(decode_group), schema=out_schema
         )
     if engine != "arrow":
         raise ValueError(f"unknown decode engine {engine!r}")
@@ -250,9 +248,6 @@ def decode_blocks(
     group_cols = meta_cols + ["payload", "validity"]
 
     def decode_stream(batches):
-        from nem_mms_spark.jobs.encode import _tune_worker
-
-        _tune_worker()  # warm system-pool heap + pinning, same as encode
         buf: list[tuple] = []
         cur = None
 
@@ -315,7 +310,8 @@ def decode_blocks(
     grouped = bdf.select(*group_cols).repartition(
         *key_cols
     ).sortWithinPartitions(*key_cols)
-    return grouped.mapInArrow(decode_stream, out_schema)
+    # warm system-pool heap + pinning, same as encode
+    return grouped.mapInArrow(tuned(decode_stream), out_schema)
 
 
 def _bin_views(arr):
@@ -391,12 +387,6 @@ def decode_blocks_direct(
     import pyarrow as pa
     import pyarrow.parquet as pq
 
-    from nem_mms_spark.jobs.encode import (
-        _acquire_gate,
-        _release_gate,
-        _tune_worker,
-    )
-
     committed_all = _committed_parts(out_dir)
     committed = committed_all
     if parts is not None:
@@ -453,109 +443,81 @@ def decode_blocks_direct(
     for p in committed:
         path = os.path.join(out_dir, M.BLOCKS_DIR, f"part_id={p}", "data.parquet")
         if os.path.exists(path):
-            splits.append((p, path))
-    if not splits:
-        return spark.createDataFrame([], schema=out_schema)
+            splits.append((p, path, os.path.getsize(path)))
     bc_blocks = (
         spark.sparkContext.broadcast(block_ids)
-        if block_ids is not None
+        if splits and block_ids is not None
         else None
     )
-    splits.sort(key=lambda s: -os.path.getsize(s[1]))
-    from nem_mms_spark.jobs.encode import _bin_file_splits
-
-    sdf, gate_dir, gate_slots = _bin_file_splits(
-        spark, splits, parallelism, tasks_per_slot, tag="d"
-    )
-
     read_cols = [
         "block_id", "column", "codec", "params", "value_count",
         "null_count", "payload", "validity",
     ]
 
-    def decode_files(batches):
-        pa.set_cpu_count(1)
-        _tune_worker()
-        gate_fd = _acquire_gate(gate_dir, gate_slots)
-        allowed_map = bc_blocks.value if bc_blocks is not None else None
-        try:
-            for batch in batches:
-                bpids = batch.column("part_id").to_pylist()
-                for bpid, path in zip(bpids, batch.column("path").to_pylist()):
-                    allowed = (
-                        allowed_map.get(bpid)
-                        if allowed_map is not None
-                        else None
-                    )
-                    with open(path, "rb", buffering=0) as fh:
-                        raw = fh.read()
-                    tbl = pq.read_table(
-                        pa.BufferReader(raw), columns=read_cols
-                    )
-                    del raw
-                    if columns is not None:
-                        import pyarrow.compute as pc
+    def decode_file(bpid: int, path: str):
+        allowed = bc_blocks.value.get(bpid) if bc_blocks is not None else None
+        with open(path, "rb", buffering=0) as fh:
+            raw = fh.read()
+        tbl = pq.read_table(pa.BufferReader(raw), columns=read_cols)
+        del raw
+        if columns is not None:
+            import pyarrow.compute as pc
 
-                        tbl = tbl.filter(
-                            pc.is_in(tbl.column("column"), pa.array(ordered))
-                        )
-                    tbl = tbl.combine_chunks()
-                    bids = tbl.column("block_id").to_numpy(zero_copy_only=False)
-                    if len(bids) == 0:
-                        continue
-                    names = tbl.column("column").to_numpy(zero_copy_only=False)
-                    codecs = tbl.column("codec").to_numpy(zero_copy_only=False)
-                    params = tbl.column("params").to_numpy(zero_copy_only=False)
-                    vcs = tbl.column("value_count").to_numpy(zero_copy_only=False)
-                    ncs = tbl.column("null_count").to_numpy(zero_copy_only=False)
-                    pay = _bin_views(tbl.column("payload").combine_chunks())
-                    val = _bin_views(tbl.column("validity").combine_chunks())
-                    bounds = np.concatenate(
-                        [[0], np.flatnonzero(bids[1:] != bids[:-1]) + 1,
-                         [len(bids)]]
+            tbl = tbl.filter(
+                pc.is_in(tbl.column("column"), pa.array(ordered))
+            )
+        tbl = tbl.combine_chunks()
+        bids = tbl.column("block_id").to_numpy(zero_copy_only=False)
+        if len(bids) == 0:
+            return
+        names = tbl.column("column").to_numpy(zero_copy_only=False)
+        codecs = tbl.column("codec").to_numpy(zero_copy_only=False)
+        params = tbl.column("params").to_numpy(zero_copy_only=False)
+        vcs = tbl.column("value_count").to_numpy(zero_copy_only=False)
+        ncs = tbl.column("null_count").to_numpy(zero_copy_only=False)
+        pay = _bin_views(tbl.column("payload").combine_chunks())
+        val = _bin_views(tbl.column("validity").combine_chunks())
+        bounds = np.concatenate(
+            [[0], np.flatnonzero(bids[1:] != bids[:-1]) + 1, [len(bids)]]
+        )
+        for bi in range(len(bounds) - 1):
+            s, e = int(bounds[bi]), int(bounds[bi + 1])
+            if allowed is not None and int(bids[s]) not in allowed:
+                continue
+            n = int(vcs[s])
+            out = {}
+            for j in range(s, e):
+                c = names[j]
+                if c not in want:
+                    continue
+                if int(vcs[j]) != n:
+                    raise ValueError(
+                        "corrupt block group: value_count mismatch "
+                        f"(part file {path}, block {bids[s]})"
                     )
-                    for bi in range(len(bounds) - 1):
-                        s, e = int(bounds[bi]), int(bounds[bi + 1])
-                        if allowed is not None and int(bids[s]) not in allowed:
-                            continue
-                        n = int(vcs[s])
-                        out = {}
-                        for j in range(s, e):
-                            c = names[j]
-                            if c not in want:
-                                continue
-                            if int(vcs[j]) != n:
-                                raise ValueError(
-                                    "corrupt block group: value_count "
-                                    f"mismatch (part file {path}, "
-                                    f"block {bids[s]})"
-                                )
-                            nc = int(ncs[j])
-                            values = decode_block(
-                                pay(j), json.loads(params[j]), n - nc,
-                                kdtypes[c], codecs[j],
-                            )
-                            arr = framing.from_kernel(
-                                values, types[c], val(j), n, nc
-                            )
-                            if len(arr) != n:
-                                raise ValueError(
-                                    f"decode count mismatch on {c}: "
-                                    f"{len(arr)} != {n}"
-                                )
-                            out[c] = arr
-                        if set(out) != want:
-                            raise ValueError(
-                                "block group missing columns: "
-                                f"{sorted(want - set(out))}"
-                            )
-                        yield pa.RecordBatch.from_arrays(
-                            [out[c] for c in ordered], schema=arrow_schema
-                        )
-        finally:
-            _release_gate(gate_fd)
+                nc = int(ncs[j])
+                values = decode_block(
+                    pay(j), json.loads(params[j]), n - nc, kdtypes[c],
+                    codecs[j],
+                )
+                arr = framing.from_kernel(values, types[c], val(j), n, nc)
+                if len(arr) != n:
+                    raise ValueError(
+                        f"decode count mismatch on {c}: {len(arr)} != {n}"
+                    )
+                out[c] = arr
+            if set(out) != want:
+                raise ValueError(
+                    f"block group missing columns: {sorted(want - set(out))}"
+                )
+            yield pa.RecordBatch.from_arrays(
+                [out[c] for c in ordered], schema=arrow_schema
+            )
 
-    return sdf.mapInArrow(decode_files, out_schema)
+    return run_file_tasks(
+        spark, splits, decode_file, out_schema, parallelism=parallelism,
+        tasks_per_slot=tasks_per_slot, tag="d", action=None,
+    )
 
 
 def scan_blocks(
@@ -636,9 +598,14 @@ def scan_blocks(
 
     # SOURCE-DIRECT data pass (r6): survivors decode via the zero-shuffle
     # per-part-dir engine — partition pruning = reading only surviving
-    # part dirs, block pruning = the survivor map inside the task
+    # part dirs, block pruning = the survivor map inside the task.  A
+    # projection without the predicate column still decodes it for the
+    # exact filter below, then drops it.
+    pred_only = columns is not None and pred_column not in columns
     decoded = decode_blocks_direct(
-        spark, out_dir, columns=columns, block_ids=surv_map
+        spark, out_dir,
+        columns=[*columns, pred_column] if pred_only else columns,
+        block_ids=surv_map,
     )
     col = F.col(pred_column)
     if is_ts:
@@ -658,7 +625,7 @@ def scan_blocks(
         decoded = decoded.filter(col >= lo)
     if hi is not None:
         decoded = decoded.filter(col <= hi)
-    return decoded
+    return decoded.drop(pred_column) if pred_only else decoded
 
 
 def _to_epoch_us(v):

@@ -29,6 +29,7 @@ from __future__ import annotations
 
 import json
 import os
+import shutil
 import time
 from collections.abc import Iterator
 
@@ -40,6 +41,7 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 from nem_mms_spark import checkpoint as ckpt
 from nem_mms_spark import framing
 from nem_mms_spark import manifest as M
+from nem_mms_spark.jobs.tasks import pinned_slot, run_file_tasks, tuned
 from nem_mms_spark.selector import ColumnContext, select_and_encode
 
 DEFAULT_SALT_BUCKETS = 8
@@ -245,25 +247,9 @@ def encode_dataframe(
         work = with_part_id(df, num_parts, key_col, salt_buckets)
     else:
         raise ValueError(f"unknown partitioning mode {partitioning!r}")
-    if not resume:
-        # fresh encode = fresh lineage + fresh data dirs (prevents stale
-        # partition dirs from a previous layout leaking into decode)
-        import shutil as _sh
-
-        ckpt.clear_checkpoint(out_dir)
-        _sh.rmtree(os.path.join(out_dir, M.BLOCKS_DIR), ignore_errors=True)
-        _sh.rmtree(os.path.join(out_dir, M.MANIFEST_DIR), ignore_errors=True)
-    ckpt.check_partitioning_meta(
-        out_dir,
-        {
-            "partitioning": partitioning,
-            "num_parts": num_parts,
-            "key_col": key_col,
-            "salt_buckets": salt_buckets,
-        },
-        resume=resume,
+    done = _start_run(
+        spark, out_dir, resume, partitioning, num_parts, key_col, salt_buckets
     )
-    done = ckpt.done_parts(spark, out_dir) if resume else None
     n_done = 0
     if done is not None:
         done = done.cache()
@@ -351,25 +337,7 @@ def encode_dataframe(
             raise errors[0]
         summaries = results.get("cold", []) + results.get("hot", [])
 
-    ckpt_rows = sorted(
-        (
-            {
-                "part_id": r["part_id"],
-                "status": "done",
-                "n_rows": r["n_rows"],
-                "n_blocks": r["n_blocks"],
-                "n_columns": r["n_columns"],
-                "raw_bytes": r["raw_bytes"],
-                "encoded_bytes": r["encoded_bytes"],
-                "fingerprint": r["fingerprint"],
-                "encode_ns": r["encode_ns"],
-                "stage_ns": r["stage_ns"],
-            }
-            for r in summaries
-        ),
-        key=lambda r: r["part_id"],
-    )
-    ckpt.commit_checkpoint_rows(ckpt_rows, out_dir)
+    ckpt.commit_checkpoint_rows(_summary_ckpt_rows(summaries), out_dir)
 
     if done is not None:
         done.unpersist()
@@ -419,7 +387,8 @@ def encode_parquet(
     both levels share every noise window), concurrency is enforced by a
     flock-based gate: each task holds one of ``parallelism`` slot locks
     for its working duration.  Kernel-released on process death, so a
-    failed task can never leak a slot.
+    failed task can never leak a slot.  Bins and gate live in
+    ``jobs/tasks.py``, shared by every source-direct pass.
     Output layout and part ids are unchanged (still one blocks/manifest
     dir per source file).
 
@@ -443,7 +412,7 @@ def encode_parquet(
     ``encode_dataframe`` with partitioning='salted' (key-based routing
     of an arbitrary DataFrame needs the shuffle).
     """
-    _t_entry = time.monotonic()
+    _t_entry = time.monotonic_ns()
     files = sorted(
         f
         for f in os.listdir(src_dir)
@@ -462,191 +431,143 @@ def encode_parquet(
         )
     if partitioning != "source_direct":
         raise ValueError(f"unknown partitioning mode {partitioning!r}")
+    src_cols = spark.read.parquet(src_dir).columns
     if sort_cols is None:
-        probe = spark.read.parquet(src_dir)
-        sort_cols = [c for c in ("warc_ts", "ts") if c in probe.columns]
-        src_cols = probe.columns
-    else:
-        src_cols = spark.read.parquet(src_dir).columns
+        sort_cols = [c for c in ("warc_ts", "ts") if c in src_cols]
+    done = _start_run(
+        spark, out_dir, resume, "source_direct", len(files), key_col, 0
+    )
+    done_ids = _part_ids(done)
+    # part ids stay keyed to the name-sorted listing, so resume identity
+    # is unaffected by the scheduler's biggest-file-first launch order
+    splits = [
+        (i, p, os.path.getsize(p))
+        for i, p in enumerate(os.path.join(src_dir, f) for f in files)
+        if i not in done_ids
+    ]
+    blocks_dir = os.path.join(out_dir, M.BLOCKS_DIR)
+    manifest_dir = os.path.join(out_dir, M.MANIFEST_DIR)
 
+    def encode_file(pid: int, path: str) -> Iterator[pa.RecordBatch]:
+        import resource
+
+        rr0 = resource.getrusage(resource.RUSAGE_SELF)
+        rc0 = time.process_time_ns()
+        tr = time.monotonic_ns()
+        tbl, read_stats = _read_source(path, src_cols)
+        ts = time.monotonic_ns()
+        if sort_cols:
+            tbl = _sort_by_unless_sorted(tbl, sort_cols)
+        read_ns = time.monotonic_ns() - tr
+        rr1 = resource.getrusage(resource.RUSAGE_SELF)
+        read_stats.update(
+            read=read_ns,
+            # sort sub-stage (the take/gather half of `read`)
+            rsort=read_ns - (ts - tr),
+            c_read_cpu=time.process_time_ns() - rc0,
+            c_read_minflt=rr1.ru_minflt - rr0.ru_minflt,
+            c_read_nivcsw=rr1.ru_nivcsw - rr0.ru_nivcsw,
+        )
+        yield _encode_partition_table(
+            pid, tbl, block_rows, block_bytes, key_col, blocks_dir,
+            manifest_dir, read_ns=read_stats, t_start_ns=tr,
+        )
+
+    t_job = time.monotonic_ns()
+    summaries = run_file_tasks(
+        spark, splits, encode_file, SUMMARY_SCHEMA,
+        parallelism=parallelism, tasks_per_slot=tasks_per_slot,
+    )
+    t_done = time.monotonic_ns()
+    ckpt.commit_checkpoint_rows(_summary_ckpt_rows(summaries), out_dir)
+    totals = ckpt.checkpoint_totals(out_dir)
+    return {
+        **totals,
+        "skipped_parts": len(done_ids),
+        **_job_report(summaries, _t_entry, t_job, t_done),
+    }
+
+
+def _start_run(
+    spark, out_dir, resume, partitioning, num_parts, key_col, salt_buckets,
+    scratch_dirs=(),
+) -> DataFrame | None:
+    """Open an encode run on ``out_dir``.  A fresh start (``resume=False``)
+    is a fresh lineage plus fresh data dirs (stale partition dirs from a
+    previous layout must not leak into decode); the partitioning mode and
+    its parameters are recorded and guarded; the committed part ids come
+    back as a DataFrame (None when there is nothing to skip)."""
     if not resume:
-        import shutil as _sh
-
         ckpt.clear_checkpoint(out_dir)
-        _sh.rmtree(os.path.join(out_dir, M.BLOCKS_DIR), ignore_errors=True)
-        _sh.rmtree(os.path.join(out_dir, M.MANIFEST_DIR), ignore_errors=True)
+        for d in (M.BLOCKS_DIR, M.MANIFEST_DIR, *scratch_dirs):
+            shutil.rmtree(os.path.join(out_dir, d), ignore_errors=True)
     ckpt.check_partitioning_meta(
         out_dir,
         {
-            "partitioning": "source_direct",
-            "num_parts": len(files),
+            "partitioning": partitioning,
+            "num_parts": num_parts,
             "key_col": key_col,
-            "salt_buckets": 0,
+            "salt_buckets": salt_buckets,
         },
         resume=resume,
     )
-    splits = [
-        (i, os.path.join(src_dir, f)) for i, f in enumerate(files)
-    ]
-    # LPT scheduling: launch the biggest files first so small tasks fill
-    # the last wave's gaps (cuts the makespan tail when tasks-per-core
-    # is small; task cost tracks file size).  Part ids stay keyed to the
-    # name-sorted listing, so resume identity is unaffected by ordering.
-    splits.sort(key=lambda s: -os.path.getsize(s[1]))
-    n_done = 0
-    if resume:
-        done = ckpt.done_parts(spark, out_dir)
-        if done is not None:
-            done_ids = {r["part_id"] for r in done.collect()}
-            n_done = len(done_ids)
-            splits = [s for s in splits if s[0] not in done_ids]
+    return ckpt.done_parts(spark, out_dir) if resume else None
 
-    blocks_dir = os.path.join(out_dir, M.BLOCKS_DIR)
-    manifest_dir = os.path.join(out_dir, M.MANIFEST_DIR)
-    summaries = []
-    gate_dir = None
-    gate_slots = 0
-    if splits:
-        sdf, gate_dir, gate_slots = _bin_file_splits(
-            spark, splits, parallelism, tasks_per_slot
-        )
 
-        def encode_files(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-            import pyarrow as _pa
-            import pyarrow.parquet as pq
+def _part_ids(done: DataFrame | None) -> set[int]:
+    return set() if done is None else {r["part_id"] for r in done.collect()}
 
-            # one arrow thread per task: Spark already runs one task per
-            # core, and pyarrow's default cpu_count-sized pool inside
-            # EVERY concurrent task oversubscribes the box (32 tasks x
-            # 32 reader threads), destroying scaling
-            _pa.set_cpu_count(1)
-            _tune_worker()
-            gate_fd = _acquire_gate(gate_dir, gate_slots)
-            try:
-                yield from _encode_file_batches(batches)
-            finally:
-                _release_gate(gate_fd)
 
-        def _encode_file_batches(batches) -> Iterator[pa.RecordBatch]:
-            import pyarrow as _pa
-            import pyarrow.parquet as pq
+def _read_source(path: str, cols: list[str]) -> tuple[pa.Table, dict]:
+    """Fetch-then-parse one source file: one big os.read pulls the file
+    bytes (object-store GET shape), then the parquet decode runs from
+    memory on the task's own thread.  Beats both mmap (per-call mapping
+    faults + munmap TLB shootdowns that IPI every busy core) and arrow's
+    own buffered reads (chunked syscalls + an IO-thread hop per column
+    chunk); with the warm system-pool heap the fetch buffer is recycled
+    across files.  Returns the table and its `rfetch`/`rparse` sub-stage
+    nanoseconds, which keep scan contention attributable at high
+    concurrency."""
+    import pyarrow.parquet as pq
 
-            for batch in batches:
-                pids = batch.column("part_id").to_pylist()
-                paths = batch.column("path").to_pylist()
-                for pid, path in zip(pids, paths):
-                    # memory_map: on a local/POSIX store, uncompressed
-                    # column chunks page straight in without a read copy
-                    import resource as _res
+    t0 = time.monotonic_ns()
+    with open(path, "rb", buffering=0) as fh:
+        raw = fh.read()
+    t1 = time.monotonic_ns()
+    tbl = pq.read_table(pa.BufferReader(raw), columns=cols)
+    return tbl, {"rfetch": t1 - t0, "rparse": time.monotonic_ns() - t1}
 
-                    rr0 = _res.getrusage(_res.RUSAGE_SELF)
-                    rc0 = time.process_time_ns()
-                    tr = time.monotonic_ns()
-                    # fetch-then-parse: one big os.read pulls the file
-                    # bytes (object-store GET shape), then the parquet
-                    # decode runs from memory on the task's own thread.
-                    # Beats both mmap (per-call mapping faults + munmap
-                    # TLB shootdowns that IPI every busy core) and
-                    # arrow's own buffered reads (chunked syscalls +
-                    # an IO-thread hop per column chunk); with the warm
-                    # system-pool heap the fetch buffer is recycled
-                    # across files.  Sub-stages `rfetch`/`rparse` keep
-                    # scan contention attributable at high concurrency.
-                    with open(path, "rb", buffering=0) as fh:
-                        raw_buf = fh.read()
-                    tf = time.monotonic_ns()
-                    tbl = pq.read_table(
-                        _pa.BufferReader(raw_buf), columns=src_cols
-                    )
-                    del raw_buf
-                    ts = time.monotonic_ns()
-                    if sort_cols:
-                        tbl = _sort_by_unless_sorted(tbl, sort_cols)
-                    read_ns = time.monotonic_ns() - tr
-                    rr1 = _res.getrusage(_res.RUSAGE_SELF)
-                    read_stats = {
-                        "read": read_ns,
-                        "rfetch": tf - tr,
-                        "rparse": ts - tf,
-                        # sort sub-stage (the take/gather half of `read`)
-                        "rsort": read_ns - (ts - tr),
-                        "c_read_cpu": time.process_time_ns() - rc0,
-                        "c_read_minflt": rr1.ru_minflt - rr0.ru_minflt,
-                        "c_read_nivcsw": rr1.ru_nivcsw - rr0.ru_nivcsw,
-                    }
-                    yield _encode_partition_table(
-                        pid, tbl, block_rows, block_bytes, key_col,
-                        blocks_dir, manifest_dir, read_ns=read_stats,
-                        t_start_ns=tr,
-                    )
 
-        _t_job = time.monotonic()
-        _t_job_ns = time.monotonic_ns()
-        try:
-            summaries = sdf.mapInArrow(encode_files, SUMMARY_SCHEMA).collect()
-            _t_collect = time.monotonic()
-            _t_collect_ns = time.monotonic_ns()
-        finally:
-            # try/finally (r7 ADVICE fix): a failed job must not leak
-            # its /dev/shm gate dir
-            if gate_dir:
-                import shutil as _sh
-
-                _sh.rmtree(gate_dir, ignore_errors=True)
-    else:
-        _t_job = _t_collect = time.monotonic()
-        _t_job_ns = _t_collect_ns = time.monotonic_ns()
-
-    ckpt_rows = sorted(
-        (
-            {
-                "part_id": r["part_id"],
-                "status": "done",
-                "n_rows": r["n_rows"],
-                "n_blocks": r["n_blocks"],
-                "n_columns": r["n_columns"],
-                "raw_bytes": r["raw_bytes"],
-                "encoded_bytes": r["encoded_bytes"],
-                "fingerprint": r["fingerprint"],
-                "encode_ns": r["encode_ns"],
-                "stage_ns": r["stage_ns"],
-            }
-            for r in summaries
-        ),
-        key=lambda r: r["part_id"],
-    )
-    ckpt.commit_checkpoint_rows(ckpt_rows, out_dir)
-    totals = ckpt.checkpoint_totals(out_dir)
-    # driver-side phase walls: how much of the job wall is fixed
-    # overhead (setup = listing/schema probe/meta guard, commit =
-    # checkpoint write + totals) vs the distributed job itself
-    driver_s = {
-        "setup": round(_t_job - _t_entry, 3),
-        "job": round(_t_collect - _t_job, 3),
-        "commit": round(time.monotonic() - _t_collect, 3),
-    }
-    # per-task timeline relative to job submit (seconds): lets the bench
-    # decompose the job wall into work vs schedule tail per parallelism
-    # level (wave structure, stragglers, gate queueing)
-    timeline = sorted(
-        (
-            {
-                "part_id": r["part_id"],
-                "start_s": round((r["t_start_ns"] - _t_job_ns) / 1e9, 4),
-                "end_s": round((r["t_end_ns"] - _t_job_ns) / 1e9, 4),
-                "pid": r["worker_pid"],
-                "slot": r["cpu_slot"],
-            }
-            for r in summaries
-        ),
-        key=lambda r: r["start_s"],
-    )
+def _job_report(summaries, t_entry: int, t_job: int, t_done: int) -> dict:
+    """Driver-side phase walls and the per-task timeline of one
+    source-direct run, from `time.monotonic_ns()` readings at entry, at
+    job submit and after the last collect."""
     return {
-        **totals,
-        "skipped_parts": n_done,
-        "driver_s": driver_s,
-        "job_wall_s": round((_t_collect_ns - _t_job_ns) / 1e9, 4),
-        "timeline": timeline,
+        # how much of the wall is fixed overhead (setup = listing/schema
+        # probe/meta guard, commit = checkpoint write + totals) vs the
+        # distributed job itself
+        "driver_s": {
+            "setup": round((t_job - t_entry) / 1e9, 3),
+            "job": round((t_done - t_job) / 1e9, 3),
+            "commit": round((time.monotonic_ns() - t_done) / 1e9, 3),
+        },
+        "job_wall_s": round((t_done - t_job) / 1e9, 4),
+        # per-task timeline relative to job submit (seconds): decomposes
+        # the job wall into work vs schedule tail (wave structure,
+        # stragglers, gate queueing)
+        "timeline": sorted(
+            (
+                {
+                    "part_id": r["part_id"],
+                    "start_s": round((r["t_start_ns"] - t_job) / 1e9, 4),
+                    "end_s": round((r["t_end_ns"] - t_job) / 1e9, 4),
+                    "pid": r["worker_pid"],
+                    "slot": r["cpu_slot"],
+                }
+                for r in summaries
+            ),
+            key=lambda r: r["start_s"],
+        ),
     }
 
 
@@ -685,89 +606,6 @@ def _sort_by_unless_sorted(tbl: pa.Table, sort_cols: list[str]) -> pa.Table:
         elif col.null_count == 0 and len(col) <= 1:
             return tbl
     return tbl.sort_by(keys)
-
-
-def _tune_worker() -> None:
-    """Per-python-worker runtime tuning for encode tasks (idempotent —
-    workers are reused across tasks, so this runs cheaply per task).
-
-    * jemalloc decay: pyarrow's default pool returns freed pages to the
-      OS after ~10 s, so every encode task re-faults its ~300-400 MB of
-      scan/sort buffers (measured ~5M minor faults per 7.4 GB encode
-      pass).  Fault SERVICE cost anti-scales at high concurrency (page
-      zeroing competes with the kernels for memory bandwidth, LRU locks
-      serialize), which is exactly the in-job contention the round-4
-      verdict flagged.  A long decay keeps a long-lived worker's arena
-      resident — the steady state a real executor reaches anyway.
-      MEMORY SIZING NOTE: with trim/mmap disabled the worker's RSS pins
-      at its high-watermark (roughly the largest source file fetched +
-      its decoded table + the serialized output buffer, ~3x the biggest
-      file) for the life of the worker.  Size executor memory for
-      n_cores x that watermark, or set NEM_MMS_ARROW_POOL=jemalloc to
-      trade steady-state RSS for the re-fault cost on constrained boxes.
-    * worker pinning (NEM_MMS_PIN_WORKERS=0 to disable): one worker per
-      core removes CFS migration + sibling-preemption noise, the local
-      stand-in for the cgroup cpuset a real cluster manager gives each
-      executor.  Each worker CLAIMS a unique core slot via an O_EXCL
-      slot file (pid-modulo was tried and REJECTED: pid collisions pin
-      two busy workers to one core, and the measured involuntary-switch
-      rate tripled); slots from dead workers are reclaimed by liveness
-      check, and when every slot is taken (more workers than cores) the
-      worker stays unpinned rather than doubling up.
-    """
-    import pyarrow as _pa
-
-    # one IO thread per task to match the one compute thread: the
-    # default 8-thread IO pool per worker process (32 workers x 8 =
-    # 256 threads) oversubscribes the box during parquet scans
-    try:
-        _pa.set_io_thread_count(1)
-    except (AttributeError, ValueError):
-        pass
-    pool = os.environ.get("NEM_MMS_ARROW_POOL", "system")
-    if pool == "system" and not getattr(_tune_worker, "_pool_set", False):
-        # Route ALL pyarrow allocations (scan, serialization, framing)
-        # through glibc malloc with trim/mmap disabled: freed blocks stay
-        # on the warm heap and are recycled without refaulting.  Measured
-        # (r5): the jemalloc default pool re-faulted ~1 M pages per
-        # encode pass inside parquet serialization alone, and fault
-        # SERVICE cost anti-scales brutally at 32-way concurrency
-        # (contended kernel page/LRU/memcg locks burn ~77x more CPU for
-        # the same work than at 8-way).  A long-lived executor's steady
-        # state is a warm resident heap; this makes the python workers
-        # reach it.  mallopt via ctypes so it works even when the
-        # MALLOC_* env vars weren't exported to the worker.
-        try:
-            import ctypes
-
-            libc = ctypes.CDLL(None, use_errno=True)
-            libc.mallopt(-1, 1 << 30)  # M_TRIM_THRESHOLD: never trim
-            libc.mallopt(-3, 1 << 30)  # M_MMAP_THRESHOLD: never mmap
-        except (OSError, AttributeError):
-            pass
-        _pa.set_memory_pool(_pa.system_memory_pool())
-        _tune_worker._pool_set = True
-    elif pool != "system":
-        try:
-            _pa.jemalloc_set_decay_ms(
-                int(os.environ.get("NEM_MMS_JEMALLOC_DECAY_MS", "300000"))
-            )
-        except (NotImplementedError, AttributeError):
-            pass  # non-jemalloc build
-    nice = int(os.environ.get("NEM_MMS_WORKER_NICE", "0"))
-    if nice and not getattr(_tune_worker, "_niced", False):
-        # raise worker CFS weight over the co-resident JVM's housekeeping
-        # threads: at full subscription every core hosts a pinned busy
-        # worker, and any JVM wakeup (GC, netty, task reaper) preempts
-        # one — a negative nice makes the scheduler give the worker its
-        # core back immediately (requires privilege; ignored without it)
-        try:
-            os.nice(nice)
-        except OSError:
-            pass
-        _tune_worker._niced = True
-    if os.environ.get("NEM_MMS_PIN_WORKERS", "1") != "0":
-        _pin_to_slot()
 
 
 def _atomic_write_ipc(table: pa.Table, dest: str) -> None:
@@ -908,7 +746,7 @@ def _encode_parquet_salted(
     resume: bool,
     parallelism: int | None,
     tasks_per_slot: int,
-    t_entry: float,
+    t_entry: int,
     hot_factor: float = 1.0,
     min_hot_rows: int = 4096,
 ) -> dict:
@@ -928,7 +766,7 @@ def _encode_parquet_salted(
          written task-side to storage — the object-store shuffle shape
          (push-based shuffle / Iceberg repartition write), not the JVM
          block-manager path.
-      2. HOT ENCODE — one task per hot bucket reads its spill files
+      2. HOT ENCODE — one split per hot bucket reads its spill files
          (pyarrow, deterministic name order), sorts, and encodes —
          identical kernel, negative part ids.
 
@@ -952,6 +790,7 @@ def _encode_parquet_salted(
     if sort_cols is None:
         sort_cols = [c for c in ("warc_ts", "ts") if c in src_cols]
     paths = [os.path.join(src_dir, f) for f in files]
+    sched = dict(parallelism=parallelism, tasks_per_slot=tasks_per_slot)
 
     # ---- hot detection: source-direct scan of the key column only ----
     # FILE-STRIDE sampling: a key at the hot threshold holds >= one
@@ -970,39 +809,24 @@ def _encode_parquet_salted(
         os.environ.get("NEM_MMS_HOT_SAMPLE_STRIDE", "0")
     ) or max(1, len(paths) // 16)
     key_splits = [
-        (i, p) for i, p in enumerate(paths) if i % stride == 0
+        (i, p, os.path.getsize(p)) for i, p in enumerate(paths)
+        if i % stride == 0
     ]
-    key_splits.sort(key=lambda s: -os.path.getsize(s[1]))
-    ksdf, kgate_dir, kgate_slots = _bin_file_splits(
-        spark, key_splits, parallelism, tasks_per_slot, tag="k"
-    )
 
-    def count_keys(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        import pyarrow as _pa
-        import pyarrow.compute as _pc
-        import pyarrow.parquet as _pq
-
-        _pa.set_cpu_count(1)
-        _tune_worker()
-        fd = _acquire_gate(kgate_dir, kgate_slots)
-        try:
-            for batch in batches:
-                for path in batch.column("path").to_pylist():
-                    # NOT fetch-then-parse here: only the key column's
-                    # chunks are needed, so let the reader seek straight
-                    # to them instead of pulling the whole file
-                    col = _pq.read_table(
-                        path, columns=[key_col], memory_map=True
-                    ).column(key_col).combine_chunks()
-                    if key_col == "url":
-                        col = _host_of(col)
-                    vc = col.value_counts()
-                    yield _pa.RecordBatch.from_arrays(
-                        [vc.field("values"), vc.field("counts").cast("int64")],
-                        names=["_k", "_c"],
-                    )
-        finally:
-            _release_gate(fd)
+    def count_keys(_pid: int, path: str) -> Iterator[pa.RecordBatch]:
+        # NOT fetch-then-parse here: only the key column's chunks are
+        # needed, so let the reader seek straight to them instead of
+        # pulling the whole file
+        col = pq.read_table(
+            path, columns=[key_col], memory_map=True
+        ).column(key_col).combine_chunks()
+        if key_col == "url":
+            col = _host_of(col)
+        vc = col.value_counts()
+        yield pa.RecordBatch.from_arrays(
+            [vc.field("values"), vc.field("counts").cast("int64")],
+            names=["_k", "_c"],
+        )
 
     key_type = "string" if key_col == "url" else (
         probe.select(key_col).schema[0].dataType.simpleString()
@@ -1027,21 +851,12 @@ def _encode_parquet_salted(
         os.environ.get("NEM_MMS_HOT_COLLECT_CAP", str(4_000_000))
     )
     est_upper = sum(
-        pq.ParquetFile(p).metadata.num_rows for _i, p in key_splits
+        pq.ParquetFile(p).metadata.num_rows for _i, p, _n in key_splits
     )
-    kdf = ksdf.mapInArrow(count_keys, f"_k {key_type}, _c long")
-    try:
-        if est_upper <= collect_cap:
-            agg: Counter = Counter()
-            total = 0
-            for r in kdf.collect():
-                total += r["_c"]
-                if r["_k"] is not None:
-                    agg[r["_k"]] += r["_c"]
-            items = list(agg.items())
-        else:
-            total = est_upper
-            items = [
+
+    def tally(kdf: DataFrame):
+        if est_upper > collect_cap:
+            return est_upper, [
                 (r["_k"], r["_c"])
                 for r in kdf.groupBy("_k")
                 .agg(F.sum("_c").alias("_c"))
@@ -1051,11 +866,18 @@ def _encode_parquet_salted(
                 )
                 .collect()
             ]
-    finally:
-        if kgate_dir:
-            import shutil as _sh
+        agg: Counter = Counter()
+        total = 0
+        for r in kdf.collect():
+            total += r["_c"]
+            if r["_k"] is not None:
+                agg[r["_k"]] += r["_c"]
+        return total, list(agg.items())
 
-            _sh.rmtree(kgate_dir, ignore_errors=True)
+    total, items = run_file_tasks(
+        spark, key_splits, count_keys, f"_k {key_type}, _c long",
+        tag="k", action=tally, **sched,
+    )
     total *= stride
     target = max(1, int(total) // max(len(files), 1))
     thresh = max(min_hot_rows, int(hot_factor * target))
@@ -1074,250 +896,131 @@ def _encode_parquet_salted(
         base += buckets
     hot_parts = base
 
-    if not resume:
-        import shutil as _sh
-
-        ckpt.clear_checkpoint(out_dir)
-        _sh.rmtree(os.path.join(out_dir, M.BLOCKS_DIR), ignore_errors=True)
-        _sh.rmtree(os.path.join(out_dir, M.MANIFEST_DIR), ignore_errors=True)
-        _sh.rmtree(os.path.join(out_dir, "hot_spill"), ignore_errors=True)
-    ckpt.check_partitioning_meta(
-        out_dir,
-        {
-            "partitioning": "salted_direct",
-            "num_parts": len(files),
-            "key_col": key_col,
-            "salt_buckets": hot_parts,
-        },
-        resume=resume,
+    done = _start_run(
+        spark, out_dir, resume, "salted_direct", len(files), key_col,
+        hot_parts, scratch_dirs=("hot_spill",),
     )
-    done_ids: set[int] = set()
-    if resume:
-        done = ckpt.done_parts(spark, out_dir)
-        if done is not None:
-            done_ids = {r["part_id"] for r in done.collect()}
+    done_ids = _part_ids(done)
 
     blocks_dir = os.path.join(out_dir, M.BLOCKS_DIR)
     manifest_dir = os.path.join(out_dir, M.MANIFEST_DIR)
     spill_dir = os.path.join(out_dir, "hot_spill")
-    all_hot_ids = [-(1 + b) for b in range(hot_parts)]
 
-    # ---- pass 1: cold encode + hot spill, one task per pending file ----
+    # ---- pass 1: cold encode + hot spill, one split per pending file ----
     cold_splits = [
-        (i, p) for i, p in enumerate(paths) if i not in done_ids
+        (i, p, os.path.getsize(p)) for i, p in enumerate(paths)
+        if i not in done_ids
     ]
-    cold_splits.sort(key=lambda s: -os.path.getsize(s[1]))
-    cold_summaries: list = []
-    _t_job = time.monotonic()
-    _t_job_ns = time.monotonic_ns()
-    if cold_splits:
-        csdf, cgate_dir, cgate_slots = _bin_file_splits(
-            spark, cold_splits, parallelism, tasks_per_slot, tag="c"
-        )
-        hot_keys = pa.array(list(plan)) if plan else None
-        plan_b = plan
-        # vectorized dispersal tables, aligned with hot_keys order (r7:
-        # the per-hot-row python loop over to_pylist'd keys was the
-        # dominant spill-side constant; index_in + numpy gather replaces
-        # it, and the crc32 content hash — SAME hash, same dispersal,
-        # same output partitions — now runs over zero-copy utf8 buffer
-        # slices instead of str round-trips)
-        plan_b0 = np.asarray([plan[k][0] for k in plan], dtype=np.int64)
-        plan_nb = np.asarray([plan[k][1] for k in plan], dtype=np.int64)
+    hot_keys = pa.array(list(plan)) if plan else None
+    # vectorized dispersal tables, aligned with hot_keys order (r7: the
+    # per-hot-row python loop over to_pylist'd keys was the dominant
+    # spill-side constant; index_in + numpy gather replaces it, and the
+    # crc32 content hash — SAME hash, same dispersal, same output
+    # partitions — now runs over zero-copy utf8 buffer slices instead of
+    # str round-trips)
+    plan_b0 = np.asarray([plan[k][0] for k in plan], dtype=np.int64)
+    plan_nb = np.asarray([plan[k][1] for k in plan], dtype=np.int64)
 
-        def cold_and_spill(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-            import pyarrow as _pa
-
-            _pa.set_cpu_count(1)
-            _tune_worker()
-            fd = _acquire_gate(cgate_dir, cgate_slots)
-            try:
-                for batch in batches:
-                    pids = batch.column("part_id").to_pylist()
-                    bpaths = batch.column("path").to_pylist()
-                    for pid, path in zip(pids, bpaths):
-                        tr = time.monotonic_ns()
-                        with open(path, "rb", buffering=0) as fh:
-                            raw_buf = fh.read()
-                        tbl = pq.read_table(
-                            _pa.BufferReader(raw_buf), columns=src_cols
-                        )
-                        del raw_buf
-                        if plan_b:
-                            kc = tbl.column(key_col).combine_chunks()
-                            if key_col == "url":
-                                kc = _host_of(kc)
-                            mask = pc.is_in(kc, value_set=hot_keys)
-                            mask = pc.fill_null(mask, False)
-                            hot_tbl = tbl.filter(mask)
-                            cold_tbl = tbl.filter(pc.invert(mask))
-                            if hot_tbl.num_rows:
-                                ki = pc.index_in(
-                                    kc.filter(mask), value_set=hot_keys
-                                ).to_numpy(zero_copy_only=False).astype(
-                                    np.int64
-                                )
-                                b0 = plan_b0[ki]
-                                nb = plan_nb[ki]
-                                kv_arr = tbl.column(key_col).filter(
-                                    mask
-                                ).combine_chunks()
-                                h = _crc32_rows(kv_arr, nb > 1)
-                                hpids = -(1 + b0 + (h % nb))
-                                order = np.argsort(hpids, kind="stable")
-                                hot_tbl = hot_tbl.take(pa.array(order))
-                                hp = hpids[order]
-                                bounds = np.concatenate(
-                                    [[0],
-                                     np.flatnonzero(hp[1:] != hp[:-1]) + 1,
-                                     [len(hp)]]
-                                )
-                                for bi in range(len(bounds) - 1):
-                                    s, e = int(bounds[bi]), int(bounds[bi + 1])
-                                    k_id = int(hp[s])
-                                    dest = os.path.join(
-                                        spill_dir, f"part_id={k_id}",
-                                        f"f{pid:05d}.arrow",
-                                    )
-                                    _atomic_write_ipc(
-                                        hot_tbl.slice(s, e - s), dest
-                                    )
-                        else:
-                            cold_tbl = tbl
-                        if sort_cols:
-                            cold_tbl = _sort_by_unless_sorted(
-                                cold_tbl, sort_cols
-                            )
-                        yield _encode_partition_table(
-                            pid, cold_tbl, block_rows, block_bytes, key_col,
-                            blocks_dir, manifest_dir,
-                            read_ns=time.monotonic_ns() - tr,
-                            t_start_ns=tr,
-                        )
-            finally:
-                _release_gate(fd)
-
-        try:
-            cold_summaries = csdf.mapInArrow(
-                cold_and_spill, SUMMARY_SCHEMA
-            ).collect()
-        finally:
-            if cgate_dir:
-                import shutil as _sh
-
-                _sh.rmtree(cgate_dir, ignore_errors=True)
-        ckpt.commit_checkpoint_rows(
-            _summary_ckpt_rows(cold_summaries), out_dir
-        )
-
-    # ---- pass 2: hot-bucket encode, one task per pending bucket ----
-    pending_hot = [h for h in all_hot_ids if h not in done_ids]
-    hot_summaries: list = []
-    if pending_hot:
-        hsplits = []
-        for h in pending_hot:
-            d = os.path.join(spill_dir, f"part_id={h}")
-            if os.path.isdir(d):
-                hsplits.append((h, d))
-        if hsplits:
-            hsplits.sort(
-                key=lambda s: -sum(
-                    os.path.getsize(os.path.join(s[1], f))
-                    for f in os.listdir(s[1])
+    def cold_and_spill(pid: int, path: str) -> Iterator[pa.RecordBatch]:
+        tr = time.monotonic_ns()
+        tbl, read_stats = _read_source(path, src_cols)
+        cold_tbl = tbl
+        if plan:
+            kc = tbl.column(key_col).combine_chunks()
+            if key_col == "url":
+                kc = _host_of(kc)
+            mask = pc.fill_null(pc.is_in(kc, value_set=hot_keys), False)
+            hot_tbl = tbl.filter(mask)
+            cold_tbl = tbl.filter(pc.invert(mask))
+            if hot_tbl.num_rows:
+                ki = pc.index_in(
+                    kc.filter(mask), value_set=hot_keys
+                ).to_numpy(zero_copy_only=False).astype(np.int64)
+                b0 = plan_b0[ki]
+                nb = plan_nb[ki]
+                kv_arr = tbl.column(key_col).filter(mask).combine_chunks()
+                h = _crc32_rows(kv_arr, nb > 1)
+                hpids = -(1 + b0 + (h % nb))
+                order = np.argsort(hpids, kind="stable")
+                hot_tbl = hot_tbl.take(pa.array(order))
+                hp = hpids[order]
+                bounds = np.concatenate(
+                    [[0], np.flatnonzero(hp[1:] != hp[:-1]) + 1, [len(hp)]]
                 )
+                for bi in range(len(bounds) - 1):
+                    s, e = int(bounds[bi]), int(bounds[bi + 1])
+                    dest = os.path.join(
+                        spill_dir, f"part_id={int(hp[s])}", f"f{pid:05d}.arrow"
+                    )
+                    _atomic_write_ipc(hot_tbl.slice(s, e - s), dest)
+        if sort_cols:
+            cold_tbl = _sort_by_unless_sorted(cold_tbl, sort_cols)
+        read_stats["read"] = time.monotonic_ns() - tr
+        yield _encode_partition_table(
+            pid, cold_tbl, block_rows, block_bytes, key_col, blocks_dir,
+            manifest_dir, read_ns=read_stats, t_start_ns=tr,
+        )
+
+    t_job = time.monotonic_ns()
+    cold_summaries = run_file_tasks(
+        spark, cold_splits, cold_and_spill, SUMMARY_SCHEMA, tag="c", **sched
+    )
+    ckpt.commit_checkpoint_rows(_summary_ckpt_rows(cold_summaries), out_dir)
+
+    # ---- pass 2: hot-bucket encode, one split per pending bucket ----
+    # hot buckets are right-sized to ~one partition each; a bucket's
+    # split size is its spill files' summed bytes
+    pending_hot = [
+        h for h in (-(1 + b) for b in range(hot_parts)) if h not in done_ids
+    ]
+    hot_splits = []
+    for h in pending_hot:
+        d = os.path.join(spill_dir, f"part_id={h}")
+        if os.path.isdir(d):
+            nbytes = sum(
+                os.path.getsize(os.path.join(d, f)) for f in os.listdir(d)
             )
-            # hot buckets are right-sized to ~one partition each, so one
-            # task per bucket; the gate still enforces `parallelism`
-            hgate_dir = None
-            hgate_slots = 0
-            if parallelism and len(hsplits) > parallelism:
-                hgate_slots = parallelism
-                hgate_dir = os.path.join(
-                    "/dev/shm/nem_mms_gate",
-                    f"h{os.getpid()}_{time.monotonic_ns()}",
-                )
-            hr = spark.sparkContext.parallelize(hsplits, len(hsplits))
-            hsdf = spark.createDataFrame(hr, schema="part_id int, path string")
+            hot_splits.append((h, d, nbytes))
 
-            def encode_hot(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-                import pyarrow as _pa
-
-                _pa.set_cpu_count(1)
-                _tune_worker()
-                fd = _acquire_gate(hgate_dir, hgate_slots)
-                try:
-                    for batch in batches:
-                        pids = batch.column("part_id").to_pylist()
-                        dirs = batch.column("path").to_pylist()
-                        for pid, d in zip(pids, dirs):
-                            tr = time.monotonic_ns()
-                            parts = [
-                                _read_ipc(os.path.join(d, f))
-                                for f in sorted(os.listdir(d))
-                                if f.endswith(".arrow")
-                            ]
-                            tbl = pa.concat_tables(parts).select(src_cols)
-                            if sort_cols:
-                                tbl = _sort_by_unless_sorted(tbl, sort_cols)
-                            yield _encode_partition_table(
-                                pid, tbl, block_rows, block_bytes, key_col,
-                                blocks_dir, manifest_dir,
-                                read_ns=time.monotonic_ns() - tr,
-                                t_start_ns=tr,
-                            )
-                finally:
-                    _release_gate(fd)
-
-            try:
-                hot_summaries = hsdf.mapInArrow(
-                    encode_hot, SUMMARY_SCHEMA
-                ).collect()
-            finally:
-                if hgate_dir:
-                    import shutil as _sh
-
-                    _sh.rmtree(hgate_dir, ignore_errors=True)
-        # zero-row markers for planned buckets the dispersal left empty,
-        # so resume never waits on a bucket that will never get data
-        got = {r["part_id"] for r in hot_summaries}
-        marker_rows = [
-            {
-                "part_id": h, "status": "done", "n_rows": 0, "n_blocks": 0,
-                "n_columns": 0, "raw_bytes": 0, "encoded_bytes": 0,
-                "fingerprint": 0, "encode_ns": 0, "stage_ns": "{}",
-            }
-            for h in pending_hot
-            if h not in got
+    def encode_hot(pid: int, d: str) -> Iterator[pa.RecordBatch]:
+        tr = time.monotonic_ns()
+        parts = [
+            _read_ipc(os.path.join(d, f))
+            for f in sorted(os.listdir(d))
+            if f.endswith(".arrow")
         ]
-        ckpt.commit_checkpoint_rows(
-            _summary_ckpt_rows(hot_summaries) + sorted(
-                marker_rows, key=lambda r: r["part_id"]
-            ),
-            out_dir,
+        tbl = pa.concat_tables(parts).select(src_cols)
+        if sort_cols:
+            tbl = _sort_by_unless_sorted(tbl, sort_cols)
+        yield _encode_partition_table(
+            pid, tbl, block_rows, block_bytes, key_col, blocks_dir,
+            manifest_dir, read_ns=time.monotonic_ns() - tr, t_start_ns=tr,
         )
-    _t_collect = time.monotonic()
-    _t_collect_ns = time.monotonic_ns()
+
+    hot_summaries = run_file_tasks(
+        spark, hot_splits, encode_hot, SUMMARY_SCHEMA, tag="h", **sched
+    )
+    # zero-row markers for planned buckets the dispersal left empty, so
+    # resume never waits on a bucket that will never get data
+    got = {r["part_id"] for r in hot_summaries}
+    marker_rows = [
+        {
+            "part_id": h, "status": "done", "n_rows": 0, "n_blocks": 0,
+            "n_columns": 0, "raw_bytes": 0, "encoded_bytes": 0,
+            "fingerprint": 0, "encode_ns": 0, "stage_ns": "{}",
+        }
+        for h in sorted(pending_hot)
+        if h not in got
+    ]
+    ckpt.commit_checkpoint_rows(
+        _summary_ckpt_rows(hot_summaries) + marker_rows, out_dir
+    )
+    t_done = time.monotonic_ns()
 
     totals = ckpt.checkpoint_totals(out_dir)
     if totals["parts"] >= len(files) + hot_parts:
         # everything committed: the spill has served its purpose
-        import shutil as _sh
-
-        _sh.rmtree(spill_dir, ignore_errors=True)
-    summaries = cold_summaries + hot_summaries
-    timeline = sorted(
-        (
-            {
-                "part_id": r["part_id"],
-                "start_s": round((r["t_start_ns"] - _t_job_ns) / 1e9, 4),
-                "end_s": round((r["t_end_ns"] - _t_job_ns) / 1e9, 4),
-                "pid": r["worker_pid"],
-                "slot": r["cpu_slot"],
-            }
-            for r in summaries
-        ),
-        key=lambda r: r["start_s"],
-    )
+        shutil.rmtree(spill_dir, ignore_errors=True)
     return {
         **totals,
         "skipped_parts": len(done_ids),
@@ -1326,13 +1029,7 @@ def _encode_parquet_salted(
         # skew magnitude actually handled this run: rows that crossed
         # the spill (the mode's cost is proportional to this fraction)
         "hot_rows": sum(r["n_rows"] for r in hot_summaries),
-        "driver_s": {
-            "setup": round(_t_job - t_entry, 3),
-            "job": round(_t_collect - _t_job, 3),
-            "commit": round(time.monotonic() - _t_collect, 3),
-        },
-        "job_wall_s": round((_t_collect_ns - _t_job_ns) / 1e9, 4),
-        "timeline": timeline,
+        **_job_report(cold_summaries + hot_summaries, t_entry, t_job, t_done),
     }
 
 
@@ -1355,152 +1052,6 @@ def _summary_ckpt_rows(summaries) -> list[dict]:
         ),
         key=lambda r: r["part_id"],
     )
-
-
-_GATE_ROOT = "/dev/shm/nem_mms_gate"
-
-
-def _prune_stale_gates(root: str = _GATE_ROOT) -> None:
-    """Remove gate dirs whose creating process is dead (r7 ADVICE fix:
-    failed encodes and lazy decode DataFrames — which never reach a
-    cleanup point — leaked lock-file dirs in /dev/shm).  Dir names embed
-    the creator pid (`<tag><pid>_<ns>`), so liveness is one /proc check;
-    live processes' gates are never touched."""
-    import re
-    import shutil as _sh
-
-    try:
-        entries = os.listdir(root)
-    except OSError:
-        return
-    for name in entries:
-        m = re.match(r"[a-z]+(\d+)_\d+$", name)
-        if not m:
-            continue
-        pid = int(m.group(1))
-        if pid != os.getpid() and not os.path.exists(f"/proc/{pid}"):
-            _sh.rmtree(os.path.join(root, name), ignore_errors=True)
-
-
-def _bin_file_splits(spark, splits, parallelism, tasks_per_slot, tag="e"):
-    """LPT-bin a [(part_id, path)] list into Spark tasks: returns
-    (DataFrame[part_id, path], gate_dir, gate_slots).  `splits` must be
-    sorted biggest-file-first.  When a concurrency gate is needed (more
-    bins than `parallelism`), the caller's kernel must wrap its work in
-    _acquire_gate/_release_gate."""
-    n_bins = len(splits)
-    gate_dir = None
-    gate_slots = 0
-    if parallelism:
-        n_bins = min(len(splits), parallelism * max(tasks_per_slot, 1))
-        if n_bins > parallelism:
-            _prune_stale_gates()
-            gate_slots = parallelism
-            gate_dir = os.path.join(
-                _GATE_ROOT,
-                f"{tag}{os.getpid()}_{time.monotonic_ns()}",
-            )
-    if n_bins < len(splits):
-        sizes = {path: os.path.getsize(path) for _i, path in splits}
-        bins: list[list] = [[] for _ in range(n_bins)]
-        loads = [0] * n_bins
-        for s in splits:
-            j = loads.index(min(loads))
-            bins[j].append(s)
-            loads[j] += sizes[s[1]]
-        # biggest bins first: under gated/backfilled scheduling the
-        # heaviest work should enter the machine in the first wave
-        bins.sort(key=lambda b: -sum(sizes[path] for _i, path in b))
-        rdd = spark.sparkContext.parallelize(bins, n_bins).flatMap(
-            lambda b: b
-        )
-    else:
-        rdd = spark.sparkContext.parallelize(splits, len(splits))
-    sdf = spark.createDataFrame(rdd, schema="part_id int, path string")
-    return sdf, gate_dir, gate_slots
-
-
-def _acquire_gate(gate_dir: str | None, n_slots: int) -> int | None:
-    """Block until one of ``n_slots`` flock slot locks is free; return the
-    held fd (kernel-released on process death — a crashed task cannot leak
-    a slot).  The gate turns "N tasks on an M-slot session" into "at most
-    n_slots tasks WORKING at once, the rest queued" — the local stand-in
-    for a cluster manager's executor-slot count, which lets one session
-    run two parallelism levels back-to-back for paired benchmarking."""
-    if gate_dir is None or n_slots <= 0:
-        return None
-    import fcntl
-
-    os.makedirs(gate_dir, exist_ok=True)
-    fds = [
-        os.open(os.path.join(gate_dir, str(i)), os.O_CREAT | os.O_RDWR, 0o644)
-        for i in range(n_slots)
-    ]
-    try:
-        while True:
-            for fd in fds:
-                try:
-                    fcntl.flock(fd, fcntl.LOCK_EX | fcntl.LOCK_NB)
-                except OSError:
-                    continue
-                for other in fds:
-                    if other != fd:
-                        os.close(other)
-                return fd
-            time.sleep(0.002)
-    except BaseException:
-        for fd in fds:
-            os.close(fd)
-        raise
-
-
-def _release_gate(fd: int | None) -> None:
-    if fd is not None:
-        os.close(fd)  # closing drops the flock
-
-
-_PIN_SLOT: list[int] | None = None
-
-
-def _pin_to_slot(slot_dir: str = "/dev/shm/nem_mms_pin") -> None:
-    """Claim a unique CPU slot for this (long-lived, reused) worker."""
-    global _PIN_SLOT
-    if _PIN_SLOT is not None:
-        return
-    ncpu = os.cpu_count() or 1
-    pid = os.getpid()
-    try:
-        os.makedirs(slot_dir, exist_ok=True)
-        for slot in range(ncpu):
-            path = os.path.join(slot_dir, str(slot))
-            for _attempt in (0, 1):
-                try:
-                    fd = os.open(path, os.O_CREAT | os.O_EXCL | os.O_WRONLY)
-                    os.write(fd, str(pid).encode())
-                    os.close(fd)
-                    os.sched_setaffinity(0, {slot})
-                    _PIN_SLOT = [slot]
-                    return
-                except FileExistsError:
-                    try:
-                        with open(path) as f:
-                            owner = int(f.read().strip() or "0")
-                    except (OSError, ValueError):
-                        owner = 0
-                    if owner == pid:  # re-claimed after a re-exec
-                        os.sched_setaffinity(0, {slot})
-                        _PIN_SLOT = [slot]
-                        return
-                    if owner and os.path.exists(f"/proc/{owner}"):
-                        break  # live owner -> next slot
-                    # stale claim from a dead worker: remove and retry
-                    try:
-                        os.unlink(path)
-                    except OSError:
-                        break
-        _PIN_SLOT = []  # all slots taken: run unpinned, never double up
-    except (OSError, AttributeError):
-        _PIN_SLOT = []
 
 
 SUMMARY_SCHEMA = (
@@ -1615,7 +1166,6 @@ def _make_encoder(
     """Build the mapInArrow kernel. Pure function of partition content."""
 
     def encode_partition(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        _tune_worker()
         cur_pid = None
         buf: list[pa.RecordBatch] = []
         for batch in batches:
@@ -1644,7 +1194,7 @@ def _make_encoder(
             manifest_dir,
         )
 
-    return encode_partition
+    return tuned(encode_partition)
 
 
 def _encode_partition_table(
@@ -1819,7 +1369,6 @@ def _encode_partition_table(
     # evidence of WHERE the 32-way wall goes
     t_end = time.monotonic_ns()
     t_start = t_start_ns if t_start_ns is not None else t0
-    slot = _PIN_SLOT[0] if _PIN_SLOT else -1
     return pa.RecordBatch.from_arrays(
         [
             pa.array([pid], type=pa.int32()),
@@ -1836,7 +1385,7 @@ def _encode_partition_table(
             pa.array([t_start], type=pa.int64()),
             pa.array([t_end], type=pa.int64()),
             pa.array([os.getpid()], type=pa.int32()),
-            pa.array([slot], type=pa.int32()),
+            pa.array([pinned_slot()], type=pa.int32()),
         ],
         names=[
             "part_id", "n_rows", "n_blocks", "n_columns", "raw_bytes",

@@ -159,8 +159,8 @@ def topk_events_per_type(spark, sf_dir):
     shuffle carries ~3 rows per (group, batch) instead of every event
     (fresh-plan paired reps: 1.65 -> 1.39 s at 1M rows, and the saving
     grows with the table — the shuffle shrinks from every row to ~3 per
-    (group, batch)).  Batches with null event_ids pass through
-    unfiltered — the filter is an optional reduction, never a
+    (group, batch)).  Batches with null event_ids or event_types pass
+    through unfiltered — the filter is an optional reduction, never a
     correctness dependency.  SIZE-GATED: below ~8 MB the JVM->Python
     Arrow round trip costs more than the small shuffle it saves
     (measured +0.35 s at 100k rows), so small tables keep the pure-JVM
@@ -207,7 +207,9 @@ def _topk_events_prefiltered(ev: DataFrame, par: int) -> DataFrame:
 
         for b in batches:
             ecol = b.column(3)
-            if b.num_rows <= 3 or ecol.null_count:
+            # null event_ids or event_types: pass through unfiltered
+            # (np.unique cannot order None against str)
+            if b.num_rows <= 3 or ecol.null_count or b.column(0).null_count:
                 yield b
                 continue
             et = np.asarray(b.column(0).to_numpy(zero_copy_only=False))

@@ -392,6 +392,30 @@ def test_topk_prefilter_matches_window_plan(spark):
         ]
 
 
+def test_topk_prefilter_passes_null_event_type(spark):
+    """A batch holding a null event_type must pass the batch-local
+    prefilter unfiltered (np.unique cannot order None against str) and
+    the plan must still return the pure-window plan's rows."""
+    from nem_mms_spark import queries as Q
+
+    rows = [(t, i, float(i % 5)) for i, t in enumerate("aabbaabbab")]
+    rows += [(None, 100, 9.0), (None, 101, 8.0)]
+    ev = spark.createDataFrame(
+        rows, "event_type string, event_id long, value double"
+    ).coalesce(1)
+
+    def key(r):
+        return (r[0] is None, r[0] or "", r[3])
+
+    for par in (1, 4):
+        a = sorted(map(tuple, Q._topk_events_windows(ev, par).collect()), key=key)
+        b = sorted(
+            map(tuple, Q._topk_events_prefiltered(ev, par).collect()), key=key
+        )
+        assert a == b
+        assert any(r[0] is None for r in b)
+
+
 def test_sort_by_unless_sorted_matches_sort_by():
     """The monotonicity skip must be byte-identical to sort_by on every
     shape: strictly sorted (skip path), ties, unsorted, nulls, NaN,

@@ -240,12 +240,18 @@ def test_salted_direct_resume_noop_and_content_determinism(
         encode_parquet(spark, src, o1, resume=True)
 
 
-def test_parallelism_bins_identical_output(spark, src, tmp_path):
-    """LPT task bins cap concurrency without changing the result: the
-    checkpoint rows (fingerprints, byte counts, part ids) and block
-    content are bit-identical at parallelism=2 vs one-task-per-file —
-    the property that lets the bench compare N-vs-4N inside one
-    session."""
+@pytest.mark.parametrize("parallelism", [None, 1], ids=["full", "p1"])
+@pytest.mark.parametrize("partitioning", ["source_direct", "salted"])
+def test_parallelism_bins_identical_output(
+    spark, src, tmp_path, partitioning, parallelism
+):
+    """LPT task bins and the concurrency gate change scheduling, never
+    the result: the checkpoint rows (fingerprints, byte counts, part
+    ids) are bit-identical between parallelism=2 and either one task
+    per file or a single gate slot — for the source-direct pass and for
+    every gated pass of the salted mode (key count, cold+spill, hot
+    buckets).  The property that lets the bench compare N-vs-4N inside
+    one session."""
     import pyarrow.dataset as ds
 
     def ckpt_content(root):
@@ -254,9 +260,36 @@ def test_parallelism_bins_identical_output(spark, src, tmp_path):
         ).to_table(columns=["part_id", "fingerprint", "encoded_bytes", "n_rows"])
         return sorted(zip(*[t.column(c).to_pylist() for c in t.column_names]))
 
-    out_full = str(tmp_path / "full")
+    kw = {"partitioning": partitioning}
+    if partitioning == "salted":
+        # low thresholds: >= 2 hot buckets, so one gate slot also
+        # queues the hot pass
+        kw.update(min_hot_rows=200, hot_factor=0.2)
+    out_a = str(tmp_path / "a")
     out_p2 = str(tmp_path / "p2")
-    m_full = encode_parquet(spark, src, out_full, resume=False)
-    m_p2 = encode_parquet(spark, src, out_p2, resume=False, parallelism=2)
-    assert m_full["rows"] == m_p2["rows"]
-    assert ckpt_content(out_full) == ckpt_content(out_p2)
+    m_a = encode_parquet(
+        spark, src, out_a, resume=False, parallelism=parallelism, **kw
+    )
+    m_p2 = encode_parquet(spark, src, out_p2, resume=False, parallelism=2, **kw)
+    assert m_a["rows"] == m_p2["rows"] == N
+    if partitioning == "salted":
+        assert m_a["hot_parts"] == m_p2["hot_parts"] >= 2
+    assert ckpt_content(out_a) == ckpt_content(out_p2)
+
+
+def test_decode_blocks_direct_gated_matches_default(spark, src, tmp_path):
+    """A single gate slot (parallelism=1) decodes exactly the rows of
+    the ungated default: same multiset of row digests."""
+    from nem_mms_spark.jobs.decode import decode_blocks_direct
+
+    out = str(tmp_path / "enc")
+    encode_parquet(spark, src, out, resume=False)
+
+    def row_digests(df):
+        h = F.xxhash64(*sorted(df.columns)).alias("h")
+        return sorted(r["h"] for r in df.select(h).collect())
+
+    a = row_digests(decode_blocks_direct(spark, out))
+    b = row_digests(decode_blocks_direct(spark, out, parallelism=1))
+    assert len(a) == N
+    assert a == b

@@ -50,6 +50,22 @@ def test_range_scan_matches_full_filter(spark, enc_dir):
     assert csum(got) == csum(expect.select(*got.columns))
 
 
+def test_range_scan_projection_without_predicate_column(spark, enc_dir):
+    """columns= may leave out the predicate column: the scan still
+    decodes it for the exact filter, then returns only the projection."""
+    out, pages = enc_dir
+    lo, hi = pages.agg(
+        F.expr("percentile(unix_micros(cast(warc_ts as timestamp)), 0.3)"),
+        F.expr("percentile(unix_micros(cast(warc_ts as timestamp)), 0.6)"),
+    ).first()
+    full = scan_blocks(spark, out, "warc_ts", lo=int(lo), hi=int(hi))
+    proj = scan_blocks(
+        spark, out, "warc_ts", lo=int(lo), hi=int(hi), columns=["url"]
+    )
+    assert proj.columns == ["url"]
+    assert proj.count() == full.count() > 0
+
+
 def test_range_scan_actually_skips_blocks(spark, enc_dir):
     out, pages = enc_dir
     b = spark.read.parquet(os.path.join(out, "blocks"))
