@@ -398,13 +398,14 @@ def encode_parquet(
     on this engine's profile (allocation-rate bound: ~same wall at 8 and
     32 threads for a 7.4 GB feed).  When the source is already a parquet
     table — the north-star ingest case — none of that is needed: Spark
-    distributes one task per data FILE (a one-column DataFrame of file
-    splits), and each task reads its file with pyarrow's vectorized C++
-    reader straight into the same Arrow-native encode kernel.  No table
-    byte ever crosses the JVM.  Partition identity = file index in the
-    sorted listing (the aligned-mode contract: stable for a static input
-    listing, guarded by the partitioning meta), so resume/idempotence
-    semantics are unchanged.  On a real cluster the listing comes from
+    distributes the data FILES over its tasks (a ``spark.range`` frame
+    whose row ``i`` selects the ``i``-th LPT bin of files, see
+    ``jobs/tasks.py``), and each task reads its files with pyarrow's
+    vectorized C++ reader straight into the same Arrow-native encode
+    kernel.  No table byte ever crosses the JVM.  Partition identity =
+    file index in the sorted listing (the aligned-mode contract: stable
+    for a static input listing, guarded by the partitioning meta), so
+    resume/idempotence semantics are unchanged.  On a real cluster the listing comes from
     the table catalog and tasks read from the object store — the same
     shape as any Iceberg-native scan.
 
@@ -431,7 +432,11 @@ def encode_parquet(
         )
     if partitioning != "source_direct":
         raise ValueError(f"unknown partitioning mode {partitioning!r}")
-    src_cols = spark.read.parquet(src_dir).columns
+    import pyarrow.parquet as pq
+
+    # the first file's footer names the columns, as Spark's own schema
+    # inference does without mergeSchema — and with no listing job
+    src_cols = pq.read_schema(os.path.join(src_dir, files[0])).names
     if sort_cols is None:
         sort_cols = [c for c in ("warc_ts", "ts") if c in src_cols]
     done = _start_run(
@@ -593,16 +598,17 @@ def _sort_by_unless_sorted(tbl: pa.Table, sort_cols: list[str]) -> pa.Table:
     if len(keys) == 1:
         col = tbl.column(keys[0][0])
         if col.null_count == 0 and len(col) > 1:
+            # the probe is only an optimisation: ANY failure in it (exotic
+            # key types can raise more than the Arrow errors) falls
+            # through to the real sort
             try:
                 arr = col.to_numpy(zero_copy_only=False)
-            except (pa.ArrowInvalid, pa.ArrowNotImplementedError):
-                arr = None
-            if (
-                arr is not None
-                and arr.dtype.kind in "Mmiuf"
-                and bool((arr[1:] > arr[:-1]).all())
-            ):
-                return tbl
+                if arr.dtype.kind in "Mmiuf" and bool(
+                    (arr[1:] > arr[:-1]).all()
+                ):
+                    return tbl
+            except Exception:
+                pass
         elif col.null_count == 0 and len(col) <= 1:
             return tbl
     return tbl.sort_by(keys)

@@ -6,6 +6,11 @@ A caller hands over a list of ``(part_id, path, nbytes)`` splits and a
 per-file ``body(part_id, path)`` that yields Arrow record batches.  This
 module owns everything about how those bodies become Spark tasks:
 
+  * the range task frame — ``spark.range(0, n_bins, 1, n_bins)`` feeds
+    ``mapInArrow``, and task ``i`` runs the bin with index ``i`` from the
+    closure.  The frame is JVM-native, so each task starts ONE python
+    worker (the mapInArrow one); a ``parallelize`` frame would add a
+    second, pickled-row python stage in front of it;
   * LPT bins — splits are packed biggest-first into
     ``parallelism * tasks_per_slot`` bins, so a straggling task is
     backfilled by the remaining bins instead of extending the makespan
@@ -16,13 +21,17 @@ module owns everything about how those bodies become Spark tasks:
     manager's executor-slot count, which lets one session run two
     parallelism levels back-to-back for paired benchmarking;
   * worker tuning — one arrow thread per task, the warm system memory
-    pool, and one pinned core per python worker.
+    pool, one pinned core per python worker, and the zip-import guard
+    that stops PySpark's per-task ``importlib.invalidate_caches()`` from
+    re-parsing every zip archive on ``sys.path`` (see ``_tune_worker``).
 """
 
 from __future__ import annotations
 
+import functools
 import os
 import shutil
+import sys
 import time
 
 import pyarrow as pa
@@ -65,10 +74,7 @@ def run_file_tasks(
             gate_dir = os.path.join(
                 _GATE_ROOT, f"{tag}{os.getpid()}_{time.monotonic_ns()}"
             )
-    sdf = spark.createDataFrame(
-        _bin_file_splits(spark, splits, n_bins),
-        schema="part_id int, path string",
-    )
+    bins = _bin_file_splits(splits, n_bins)
 
     def file_task(batches):
         # one arrow thread per task: Spark already runs one task per
@@ -80,14 +86,14 @@ def run_file_tasks(
         fd = _acquire_gate(gate_dir, gate_slots)
         try:
             for batch in batches:
-                pids = batch.column("part_id").to_pylist()
-                paths = batch.column("path").to_pylist()
-                for pid, path in zip(pids, paths):
-                    yield from body(pid, path)
+                for i in batch.column("id").to_pylist():
+                    for pid, path in bins[i]:
+                        yield from body(pid, path)
         finally:
             _release_gate(fd)
 
-    frame = sdf.mapInArrow(file_task, schema)
+    # range partition i holds exactly the id i, so task i runs bin i
+    frame = spark.range(0, n_bins, 1, n_bins).mapInArrow(file_task, schema)
     if action is None:
         return frame
     try:
@@ -114,13 +120,11 @@ def pinned_slot() -> int:
     return _PIN_SLOT[0] if _PIN_SLOT else -1
 
 
-def _bin_file_splits(spark, splits, n_bins):
+def _bin_file_splits(splits, n_bins):
     """LPT-bin biggest-first ``(part_id, path, nbytes)`` splits into
-    ``n_bins`` Spark partitions; returns an RDD of (part_id, path)."""
+    ``n_bins`` lists of ``(part_id, path)``, heaviest bin first."""
     if n_bins >= len(splits):
-        return spark.sparkContext.parallelize(
-            [s[:2] for s in splits], len(splits)
-        )
+        return [[s[:2]] for s in splits]
     bins: list[list] = [[] for _ in range(n_bins)]
     loads = [0] * n_bins
     for s in splits:
@@ -130,9 +134,7 @@ def _bin_file_splits(spark, splits, n_bins):
     # biggest bins first: under gated/backfilled scheduling the heaviest
     # work should enter the machine in the first wave
     bins.sort(key=lambda b: -sum(s[2] for s in b))
-    return spark.sparkContext.parallelize(bins, n_bins).flatMap(
-        lambda b: [s[:2] for s in b]
-    )
+    return [[s[:2] for s in b] for b in bins]
 
 
 def _prune_stale_gates(root: str = _GATE_ROOT) -> None:
@@ -219,6 +221,16 @@ def _tune_worker() -> None:
       rate tripled); slots from dead workers are reclaimed by liveness
       check, and when every slot is taken (more workers than cores) the
       worker stays unpinned rather than doubling up.
+    * zip-import guard (``_guard_zip_invalidation``): PySpark's per-task
+      ``setup_spark_files`` calls ``importlib.invalidate_caches()``, and
+      on Python 3.11 every cached ``zipimporter`` then re-parses its
+      whole archive directory (a worker holds 14-16 importers on
+      pyspark.zip, 1,328 entries, and on the spark-core jar, 5,359
+      entries): measured 105-315 ms, typically ~200 ms, of CPU per task
+      inside 4 concurrent local[4] workers, before the task body
+      starts, on every slot's critical path.  Guarded, the call takes
+      ~0.05 ms once the worker has read each archive, and an archive is
+      re-read only when its mtime or size changed.
     """
     # one IO thread per task to match the one compute thread: the
     # default 8-thread IO pool per worker process (32 workers x 8 =
@@ -239,9 +251,45 @@ def _tune_worker() -> None:
         except (OSError, AttributeError):
             pass
         pa.set_memory_pool(pa.system_memory_pool())
+        _guard_zip_invalidation()
         _tune_worker._pool_set = True
     if os.environ.get("NEM_MMS_PIN_WORKERS", "1") != "0":
         _pin_to_slot()
+
+
+def _guard_zip_invalidation() -> None:
+    """Make ``zipimporter.invalidate_caches`` re-read an archive's
+    directory only when the archive's ``(st_mtime_ns, st_size)`` moved
+    since this process last read it; otherwise the importer takes the
+    shared cached directory.  When the archive cannot be stat'ed, the
+    real re-read runs.  Installed at most once per process (the wrapper
+    carries ``__wrapped__``); a no-op on Python >= 3.12, where CPython
+    already made the invalidation lazy (gh-103200)."""
+    if sys.version_info >= (3, 12):
+        return
+    import zipimport
+
+    real = zipimport.zipimporter.invalidate_caches
+    if hasattr(real, "__wrapped__"):
+        return
+    read_at: dict[str, tuple[int, int]] = {}
+
+    @functools.wraps(real)
+    def invalidate_caches(self):
+        try:
+            st = os.stat(self.archive)
+        except OSError:
+            real(self)
+            return
+        stamp = (st.st_mtime_ns, st.st_size)
+        files = zipimport._zip_directory_cache.get(self.archive)
+        if files is not None and read_at.get(self.archive) == stamp:
+            self._files = files
+            return
+        real(self)
+        read_at[self.archive] = stamp
+
+    zipimport.zipimporter.invalidate_caches = invalidate_caches
 
 
 _PIN_SLOT: list[int] | None = None

@@ -458,3 +458,37 @@ def test_sort_by_unless_sorted_matches_sort_by():
     ts = pa.array(np.arange(10, dtype="int64"), type=pa.timestamp("us"))
     tbl = pa.table({"warc_ts": ts, "v": [str(i) for i in range(10)]})
     assert _sort_by_unless_sorted(tbl, ["warc_ts"]) is tbl
+
+
+def test_sort_by_unless_sorted_probe_error_falls_through():
+    """Any exception in the monotonicity probe (not only the Arrow
+    errors) must fall through to the real sort_by."""
+    import pyarrow as pa
+
+    from nem_mms_spark.jobs.encode import _sort_by_unless_sorted
+
+    class ExoticKey:
+        null_count = 0
+
+        def __len__(self):
+            return 3
+
+        def to_numpy(self, zero_copy_only=True):
+            raise TypeError("no numpy view of this key type")
+
+    class Table:
+        """A real table whose key column's probe raises TypeError."""
+
+        def __init__(self, tbl):
+            self.tbl = tbl
+            self.column_names = tbl.column_names
+
+        def column(self, name):
+            return ExoticKey()
+
+        def sort_by(self, keys):
+            return self.tbl.sort_by(keys)
+
+    tbl = pa.table({"k": [3, 1, 2], "v": list("abc")})
+    got = _sort_by_unless_sorted(Table(tbl), ["k"])
+    assert got.equals(tbl.sort_by([("k", "ascending")]))

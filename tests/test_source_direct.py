@@ -41,6 +41,20 @@ def test_roundtrip_multiset_equal(spark, src, tmp_path):
     assert a.join(b, ["h", "count"]).count() == a.count()
 
 
+def test_source_columns_match_spark_schema(spark, src, tmp_path):
+    """encode_parquet names the source columns from the first listed
+    file's footer instead of a Spark schema job: same names, same order
+    as Spark's, and the encoded table carries them."""
+    import pyarrow.parquet as pq
+
+    first = sorted(f for f in os.listdir(src) if f.endswith(".parquet"))[0]
+    want = spark.read.parquet(src).columns
+    assert pq.read_schema(os.path.join(src, first)).names == want
+    out = str(tmp_path / "enc")
+    encode_parquet(spark, src, out, resume=False)
+    assert decode_blocks(spark, out).columns == want
+
+
 def test_resume_skips_done_and_completes_partial(spark, src, tmp_path):
     out = str(tmp_path / "enc")
     m1 = encode_parquet(spark, src, out, resume=False)
