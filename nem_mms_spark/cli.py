@@ -66,17 +66,13 @@ def cmd_encode(args) -> int:
 
 
 def cmd_decode(args) -> int:
-    from nem_mms_spark.jobs.decode import decode_blocks, decode_blocks_direct
+    from nem_mms_spark.jobs.decode import decode_blocks
 
     spark = _spark(args)
     cols = args.columns.split(",") if args.columns else None
-    engine = getattr(args, "engine", "direct")
-    if engine == "direct":
-        df = decode_blocks_direct(spark, args.encoded, columns=cols)
-    else:
-        df = decode_blocks(spark, args.encoded, columns=cols, engine=engine)
+    df = decode_blocks(spark, args.encoded, columns=cols)
     df.write.mode("overwrite").parquet(args.out)
-    print(json.dumps({"written": args.out, "engine": engine}))
+    print(json.dumps({"written": args.out}))
     return 0
 
 
@@ -177,6 +173,8 @@ def cmd_info(args) -> int:
 
 
 def main(argv=None) -> int:
+    from nem_mms_spark.jobs.encode import DEFAULT_SALT_BUCKETS
+
     p = argparse.ArgumentParser(prog="nem_mms_spark")
     p.add_argument("--master", default=None, help="spark master override")
     sub = p.add_subparsers(dest="cmd", required=True)
@@ -191,7 +189,7 @@ def main(argv=None) -> int:
     e.add_argument("--out", required=True)
     e.add_argument("--num-parts", type=int, default=None)
     e.add_argument("--key", default=None)
-    e.add_argument("--salt-buckets", type=int, default=4)
+    e.add_argument("--salt-buckets", type=int, default=DEFAULT_SALT_BUCKETS)
     e.add_argument("--no-resume", action="store_true")
     e.add_argument(
         "--partitioning",
@@ -211,17 +209,14 @@ def main(argv=None) -> int:
     )
     e.set_defaults(fn=cmd_encode)
 
-    d = sub.add_parser("decode", help="decode blocks back to parquet")
+    d = sub.add_parser(
+        "decode",
+        help="decode the committed partitions back to parquet (one "
+        "task per LPT bin of part files, zero shuffle)",
+    )
     d.add_argument("--encoded", required=True)
     d.add_argument("--out", required=True)
     d.add_argument("--columns", default=None)
-    d.add_argument(
-        "--engine",
-        default="direct",
-        choices=("direct", "arrow", "pandas"),
-        help="direct = source-direct per-part-dir decode (zero shuffle, "
-        "fastest); arrow/pandas = generic Spark-scan engines",
-    )
     d.set_defaults(fn=cmd_decode)
 
     v = sub.add_parser("verify", help="bit-identical round-trip check")

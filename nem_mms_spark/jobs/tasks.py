@@ -104,9 +104,9 @@ def run_file_tasks(
 
 
 def tuned(fn):
-    """Wrap a one-argument mapInArrow/applyInPandas function so every
-    call first applies the worker tuning (for kernels fed by Spark's own
-    scan).  One named argument, because applyInPandas checks the arity."""
+    """Wrap a mapInArrow function so every call first applies the worker
+    tuning (for kernels fed by Spark's own scan, which bypass
+    ``run_file_tasks``: the DataFrame encode modes)."""
 
     def run(data):
         _tune_worker()

@@ -735,8 +735,8 @@ def banded_matmul_parity(spark, sf_dir):
     (id, band, sig) signature tables — identical sig tables mean
     identical band buckets, identical bucket filters, and therefore
     identical enumerated pair sets.  So the divergence is measured
-    FIRST on the sig tables (n * n_bands rows of three ints, one tiny
-    broadcast join) instead of on the ~O(sum bucket^2) pair sets.  When
+    FIRST on the sig tables (n * n_bands rows of three ints, one
+    full-outer join) instead of on the ~O(sum bucket^2) pair sets.  When
     the tables agree elementwise — the design-expected case — the
     symmetric difference is empty BY THAT MEASUREMENT, and only one
     pair stream pays enumeration + the distinct shuffle for n_pairs
@@ -768,9 +768,12 @@ def _banded_parity_sig_proxy(emb: DataFrame) -> DataFrame:
     mm_sigs = similarity.band_sigs(emb, method="matmul", **sig_kw).select(
         F.col("vec_id"), F.col("band"), F.col("sig").alias("_msig")
     )
+    # full outer + null-safe: a (vec_id, band) row on one side only is a
+    # divergence too.  No broadcast hint: this branch runs only above the
+    # embeddings size gate, where the sig table is not broadcast-sized.
     n_sig_diff = (
-        fold_sigs.join(F.broadcast(mm_sigs), ["vec_id", "band"])
-        .filter(F.col("sig") != F.col("_msig"))
+        fold_sigs.join(mm_sigs, ["vec_id", "band"], "full_outer")
+        .filter(~F.col("sig").eqNullSafe(F.col("_msig")))
         .count()
     )
     if n_sig_diff == 0:

@@ -69,14 +69,21 @@ def decode_stream_output(
     spark: SparkSession, out_dir: str, columns: list[str] | None = None
 ):
     """Decode the WHOLE streaming output — every batch=<epoch> dir — as
-    one DataFrame.  The batch layouts are union-compatible, so ONE glob
-    scan reads them all (plan size and driver work are O(1) in epoch
-    count — the round-3 per-batch union loop re-planned and re-listed
-    per epoch, driver-bound at thousands of epochs); block groups are
-    keyed by (batch, part_id, block_id) so same-numbered partitions from
-    different epochs never merge."""
+    one DataFrame.  Each batch dir is a complete encode output with its
+    own checkpoint, so the batch roots go to ``decode_blocks`` as one
+    list: one split list over every committed (batch, part) file and one
+    task frame, so plan size and driver work are O(1) in epoch count
+    (the round-3 per-batch union loop re-planned and re-listed per
+    epoch, driver-bound at thousands of epochs).  A batch with no
+    checkpoint is skipped, a partly committed one contributes only its
+    committed parts, and no committed batch at all raises."""
     from nem_mms_spark.jobs.decode import decode_blocks
 
-    if not any(d.startswith("batch=") for d in os.listdir(out_dir)):
+    roots = sorted(
+        os.path.join(out_dir, d)
+        for d in os.listdir(out_dir)
+        if d.startswith("batch=")
+    )
+    if not roots:
         raise ValueError(f"no batch outputs under {out_dir}")
-    return decode_blocks(spark, out_dir, columns=columns, stream_batches=True)
+    return decode_blocks(spark, roots, columns=columns)

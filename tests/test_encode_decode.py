@@ -32,21 +32,6 @@ def test_encode_decode_bit_identical(spark, pages, tmp_path_factory):
     assert result["decoded_rows"] == N_ROWS
 
 
-def test_decode_engines_agree(spark, pages, tmp_path_factory):
-    """The mapInArrow decode (default) and the applyInPandas decode must
-    produce identical multisets."""
-    from nem_mms_spark.jobs.decode import decode_blocks
-
-    out = str(tmp_path_factory.mktemp("enc_eng"))
-    encode_dataframe(spark, pages, out, num_parts=4, block_rows=512)
-    a = decode_blocks(spark, out, engine="arrow")
-    p = decode_blocks(spark, out, engine="pandas")
-    ga = a.groupBy("url").count()
-    gp = p.groupBy("url").count()
-    assert a.count() == N_ROWS and p.count() == N_ROWS
-    assert ga.join(gp, ["url", "count"]).count() == ga.count()
-
-
 def test_manifest_selector_outcomes(spark, pages, tmp_path_factory):
     """FIXTURES.md §A expected selector outcomes per column."""
     out = str(tmp_path_factory.mktemp("enc_sel"))

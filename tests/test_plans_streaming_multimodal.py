@@ -3,6 +3,8 @@ encode, and multimodal stub plumbing."""
 
 from __future__ import annotations
 
+import os
+
 import numpy as np
 import pytest
 
@@ -96,11 +98,74 @@ def test_incremental_encode_two_batches(spark, tmp_path):
     assert a.join(b, ["url", "count"]).count() == a.count()
 
 
+def test_stream_decode_reads_only_committed_batches(spark, tmp_path):
+    """Visibility across batch roots: a torn batch dir (blocks and
+    manifest, no checkpoint) is skipped, a batch whose checkpoint lost
+    one part's row contributes only its committed parts, and an output
+    with no committed batch at all raises."""
+    import glob
+    import shutil
+
+    import pyarrow.dataset as ds
+    import pyarrow.parquet as pq
+
+    from nem_mms_spark.datagen import web_pages_df
+    from nem_mms_spark.jobs.decode import decode_blocks
+    from nem_mms_spark.streaming import (
+        decode_stream_output,
+        incremental_encode,
+    )
+
+    src = str(tmp_path / "landing")
+    out = str(tmp_path / "enc")
+    web_pages_df(spark, 500).write.mode("append").parquet(src)
+    incremental_encode(spark, src, out, num_parts=2)
+    web_pages_df(spark, 300).filter(F.col("url").isNotNull()).write.mode(
+        "append"
+    ).parquet(src)
+    incremental_encode(spark, src, out, num_parts=2)
+    batches = sorted(glob.glob(out + "/batch=*"))
+    assert len(batches) >= 2
+
+    def row_digests(df):
+        h = F.xxhash64(*sorted(df.columns)).alias("h")
+        return sorted(r["h"] for r in df.select(h).collect())
+
+    # torn batch: a real batch's data files with no checkpoint
+    for sub in ("blocks", "manifest"):
+        shutil.copytree(
+            os.path.join(batches[0], sub), os.path.join(out, "batch=99", sub)
+        )
+    # partly committed batch: drop one part's checkpoint row
+    ckpt_dir = os.path.join(batches[-1], "checkpoint")
+    runs = glob.glob(os.path.join(ckpt_dir, "run-*.parquet"))
+    rows = ds.dataset(runs, format="parquet").to_table()
+    gone = rows.column("part_id")[0].as_py()
+    dropped = row_digests(decode_blocks(spark, batches[-1], parts=[gone]))
+    assert dropped
+    for f in runs:
+        os.remove(f)
+    keep = rows.filter(ds.field("part_id") != gone)
+    assert keep.num_rows > 0
+    pq.write_table(keep, os.path.join(ckpt_dir, "run-kept.parquet"))
+
+    want = row_digests(spark.read.parquet(src))
+    for h in dropped:
+        want.remove(h)
+    assert row_digests(decode_stream_output(spark, out)) == want
+
+    for b in batches:
+        shutil.rmtree(os.path.join(b, "checkpoint"))
+    with pytest.raises(ValueError, match="no committed batch outputs"):
+        decode_stream_output(spark, out)
+
+
 def test_stream_decode_is_single_scan_over_many_batches(spark, tmp_path):
     """Plan-size contract for the cross-batch decode: however many epochs
-    exist, the decode plan contains exactly ONE parquet scan of block
-    files (the round-3 implementation unioned one sub-plan per batch, so
-    plan size and driver work grew with epoch count)."""
+    exist, the decode plan is ONE task frame — one Range feeding one
+    MapInArrow, no Union (the round-3 implementation unioned one
+    sub-plan per batch, so plan size and driver work grew with epoch
+    count)."""
     from nem_mms_spark.datagen import web_pages_df
     from nem_mms_spark.jobs.encode import encode_dataframe
     from nem_mms_spark.streaming import decode_stream_output
@@ -118,9 +183,10 @@ def test_stream_decode_is_single_scan_over_many_batches(spark, tmp_path):
     dec = decode_stream_output(spark, out)
     assert dec.count() == n_batches * rows_each
     plan = dec._jdf.queryExecution().executedPlan().toString()
-    # one batched scan node reads every batch's blocks
-    n_scans = plan.count("Scan parquet")
-    assert n_scans == 1, plan
+    # one split list over every batch's part files, one task frame
+    assert plan.count("Range (") == 1, plan
+    assert plan.count("MapInArrow") == 1, plan
+    assert "Union" not in plan, plan
 
 
 def test_multimodal_feature_extraction(spark):

@@ -307,23 +307,45 @@ def test_banded_parity_proxy_matches_pair_level_set_algebra(spark):
     assert res.n_sym_diff == len(fold ^ mm)
 
 
-def test_banded_parity_fallback_on_sig_divergence(spark, monkeypatch):
-    """When the matmul sig table diverges, the sig-proxy branch must
-    take the pair-level fallback and report the TRUE counts for the
-    perturbed engine path (not the proxy shortcut's zero)."""
+def _single_band_pair_row(spark):
+    """An (vec_id, band) sig row of the SF_SMALL embeddings whose
+    candidate pair collides in no other band: without that row the pair
+    leaves the candidate set."""
+    from nem_mms_spark import queries as Q
+
+    emb = spark.read.parquet(f"{SF_SMALL}/embeddings.parquet")
+    sigs = S.band_sigs(
+        emb, n_bands=Q._PAIR_BANDS, band_bits=Q._PAIR_BAND_BITS,
+        seed=Q._PAIR_SEED,
+    ).toPandas()
+    m = sigs.merge(sigs, on=["band", "sig"])
+    m = m[m.vec_id_x < m.vec_id_y]
+    n_bands = m.groupby(["vec_id_x", "vec_id_y"])["band"].transform("nunique")
+    row = m[n_bands == 1].iloc[0]
+    return int(row.vec_id_x), int(row.band)
+
+
+@pytest.mark.parametrize("perturb", ["flip_sig", "drop_row"])
+def test_banded_parity_fallback_on_sig_divergence(spark, monkeypatch, perturb):
+    """When the matmul sig table diverges — one (id, band) sig flipped,
+    or one (id, band) row missing on the matmul side — the sig-proxy
+    branch must take the pair-level fallback and report the TRUE counts
+    for the perturbed engine path (not the proxy shortcut's zero)."""
     from nem_mms_spark import queries as Q
 
     orig = S._band_sigs_matmul
+    if perturb == "flip_sig":
+        vid, band = 0, 0
+    else:
+        vid, band = _single_band_pair_row(spark)
 
     def perturbed(embeddings, planes, n_bands, band_bits, id_col, vec_col):
         out = orig(embeddings, planes, n_bands, band_bits, id_col, vec_col)
-        # flip the sig of one (id, band) row: vec 0, band 0
+        hit = (F.col(id_col) == vid) & (F.col("band") == band)
+        if perturb == "drop_row":
+            return out.filter(~hit)
         return out.withColumn(
-            "sig",
-            F.when(
-                (F.col(id_col) == 0) & (F.col("band") == 0),
-                F.col("sig") + 1,
-            ).otherwise(F.col("sig")),
+            "sig", F.when(hit, F.col("sig") + 1).otherwise(F.col("sig"))
         )
 
     monkeypatch.setattr(S, "_band_sigs_matmul", perturbed)
@@ -342,6 +364,8 @@ def test_banded_parity_fallback_on_sig_divergence(spark, monkeypatch):
         (r.vec_a, r.vec_b)
         for r in S.banded_candidate_pairs(emb, method="matmul", **kw).collect()
     }
+    if perturb == "drop_row":
+        assert fold ^ mm, "the dropped row must change the pair set"
     assert res.n_pairs == len(fold)
     assert res.n_sym_diff == len(fold ^ mm)
 
